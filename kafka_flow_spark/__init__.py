@@ -9,8 +9,7 @@ records (see SURVEY.md).  This package re-expresses those semantics Spark-first:
 - ``operators.keyed``: batch execution of per-key ordered folds via
   ``groupBy(key).applyInPandas`` (reference hot path: core/.../FoldToState.scala).
 - ``streaming.flow``: the streaming Flow API compiled to Structured Streaming
-  with ``applyInPandasWithState`` / ``transformWithStateInPandas``
-  (reference: core/.../KafkaFlow.scala poll loop + KeyFlow).
+  with ``applyInPandasWithState`` (reference: core/.../KafkaFlow.scala poll loop + KeyFlow).
 - ``persistence``: explicit snapshot/journal persistence modes
   (reference: persistence-cassandra/, persistence-kafka/).
 - ``operators.dedup`` / ``operators.similarity`` / ``operators.text`` /

@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from kafka_flow_spark import sources
 from kafka_flow_spark.streaming.flow import (
     FlowSpec,
+    _run_sink,
+    needs_drain,
     run_to_memory_sink,
     run_to_parquet_sink,
     stateful_flow,
@@ -98,10 +100,7 @@ class Flow:
 
     # --- the keyed stateful core (#9, #17, #18) ---
     def fold(self, spec: FlowSpec) -> "Flow":
-        # only wall-clock timers break availableNow termination (see _drain);
-        # event-time timers stop with the watermark, so availableNow is fine
-        timered = spec.timeout_ms is not None and spec.timeout_mode == "processing"
-        return Flow(stateful_flow(self.df, spec), _timered=timered)
+        return Flow(stateful_flow(self.df, spec), _timered=needs_drain(spec))
 
     # --- sinks (checkpoint = persistence + offset commit, §3.1 steps 5-6) ---
     def to_parquet(self, out_dir: str, checkpoint: str) -> None:
@@ -132,11 +131,4 @@ class Flow:
     def foreach_batch(self, fn, checkpoint: str) -> None:
         """Custom sink per epoch (explicit snapshot/journal tables, Kafka
         writes, MERGE upserts) — the foreachBatch escape hatch."""
-        q = (
-            self.df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(fn)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _run_sink(self.df.writeStream.foreachBatch(fn), checkpoint, available_now=not self._timered)

@@ -6,9 +6,9 @@ core/.../TickOption.scala:6-44; driven by ``TickToState.run``
 (core/.../TickToState.scala:32-49).  A ``None`` result deletes the key
 (canonical use: session expiry, docs/overview.md:303-306).
 
-In the Spark engine ticks run in the timer branch of the stateful processor
-(``applyInPandasWithState`` timeout / ``transformWithState`` expired timers) —
-see streaming.flow.
+In the Spark engine ticks run in the timeout branch of the
+``applyInPandasWithState`` function, and for offset timers inside its fold
+loop — see streaming.flow.
 """
 
 from __future__ import annotations

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from kafka_flow_spark.operators.fold import FoldOption, State
 from kafka_flow_spark.operators.keyed import keyed_fold_final
+from kafka_flow_spark.streaming.flow import _run_sink
 
 
 def append_journal(batch: DataFrame, table_dir: str) -> None:
@@ -37,29 +38,23 @@ def journal_sink(flowed: DataFrame, checkpoint: str, table_dir: str) -> None:
     Replayed epochs re-append identical (key, offset) rows; ``replay`` dedups
     by offset, so the journal is at-least-once + idempotent-on-read.
     """
-    q = (
-        flowed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(lambda batch, _bid: append_journal(batch, table_dir))
-        .trigger(availableNow=True)
-        .start()
+    _run_sink(
+        flowed.writeStream.foreachBatch(lambda batch, _bid: append_journal(batch, table_dir)),
+        checkpoint,
     )
-    q.awaitTermination()
 
 
 def read_journal(
-    spark: SparkSession,
-    table_dir: str,
-    key_cols: Sequence[str] = ("key",),
-    min_offset_exclusive: int | None = None,
+    spark: SparkSession, table_dir: str, min_offset_exclusive: int | None = None
 ) -> DataFrame:
-    """Ordered journal read, optionally only offsets > a snapshot offset.
+    """Journal read, optionally only offsets > a snapshot offset.
 
     The filter is pushed to the parquet scan (row-group pruning) — the replay
     analog of the Cassandra clustering-key range read
-    (CassandraJournals.scala:128 ``ORDER BY offset``).
+    (CassandraJournals.scala:128 ``ORDER BY offset``).  Rows may repeat a
+    (key, offset): ``journal_sink`` is at-least-once, and ``replay`` dedups.
     """
-    df = spark.read.parquet(table_dir).dropDuplicates([*key_cols, "offset"])
+    df = spark.read.parquet(table_dir)
     if min_offset_exclusive is not None:
         df = df.filter(F.col("offset") > min_offset_exclusive)
     return df

@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_flow_spark.streaming.flow import _run_sink
+
 
 def append_snapshots(batch: DataFrame, table_dir: str) -> None:
     """Append snapshot rows ``(…key cols, offset, value)`` to the log.
@@ -102,11 +104,7 @@ def snapshot_sink(
     persistence, the reference's exact contract (docs/kafka-single-writer-
     design.md:80-88).
     """
-    q = (
-        flowed.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(lambda batch, _bid: append_snapshots(batch, table_dir))
-        .trigger(availableNow=True)
-        .start()
+    _run_sink(
+        flowed.writeStream.foreachBatch(lambda batch, _bid: append_snapshots(batch, table_dir)),
+        checkpoint,
     )
-    q.awaitTermination()

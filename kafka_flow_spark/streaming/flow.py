@@ -32,6 +32,7 @@ from typing import Any
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import DataStreamWriter
 
 from kafka_flow_spark.operators.fold import FoldOption
 from kafka_flow_spark.operators.tick import TickOption
@@ -67,12 +68,10 @@ class FlowSpec:
 
     ``state_ttl_ms`` is the idle-state eviction contract (``unloadOrphaned``,
     TimerFlowOf.scala:36-77): a key whose state has not been updated for the
-    TTL is deleted without any user tick code.  On the transformWithState
-    path this is the state store's native TTL; on the
-    ``applyInPandasWithState`` path it is emulated with a processing-time
-    timeout that removes the state (see ``stateful_flow``), which requires
-    ``timeout_ms``/``tick`` to be unset — combine TTL with custom timers by
-    encoding the eviction in your own tick instead.
+    TTL is deleted without any user tick code.  It compiles to a
+    processing-time timeout that removes the state (``_with_ttl_emulation``),
+    which requires ``timeout_ms``/``tick`` to be unset — combine TTL with
+    custom timers by encoding the eviction in your own tick instead.
     """
 
     key_cols: list[str]
@@ -194,16 +193,15 @@ def _schema_cols(ddl: str) -> list[str]:
 
 
 def _with_ttl_emulation(spec: FlowSpec) -> FlowSpec:
-    """Compile ``state_ttl_ms`` for the applyInPandasWithState path: a
-    processing-time timeout whose tick deletes the state (idle keys evict
-    without any user code — the unloadOrphaned contract)."""
+    """Compile ``state_ttl_ms`` to a processing-time timeout whose tick
+    deletes the state (idle keys evict without any user code — the
+    unloadOrphaned contract)."""
     if spec.state_ttl_ms is None:
         return spec
     if spec.timeout_ms is not None or spec.tick is not None:
         raise ValueError(
-            "state_ttl_ms on the applyInPandasWithState path emulates TTL via "
-            "the processing-time timer, so timeout_ms/tick must be unset — "
-            "encode eviction in your own tick, or use the tws path"
+            "state_ttl_ms emulates TTL via the processing-time timer, so "
+            "timeout_ms/tick must be unset — encode eviction in your own tick"
         )
     import dataclasses
 
@@ -245,6 +243,17 @@ def stateful_flow(records: DataFrame, spec: FlowSpec) -> DataFrame:
     )
 
 
+def needs_drain(spec: FlowSpec) -> bool:
+    """Whether the compiled flow carries processing-time timers, so it cannot
+    run under ``availableNow`` and must be drained (see ``_drain``).
+
+    Decided on the TTL-compiled spec: ``state_ttl_ms`` becomes a
+    processing-time timeout.  Event-time timers stop with the watermark, so
+    ``availableNow`` terminates for them."""
+    spec = _with_ttl_emulation(spec)
+    return spec.timeout_ms is not None and spec.timeout_mode == "processing"
+
+
 def _drain(q, available_now: bool, idle_batches: int = 3, timeout_s: float = 120.0) -> None:
     """Run the backlog to completion and stop.
 
@@ -258,20 +267,40 @@ def _drain(q, available_now: bool, idle_batches: int = 3, timeout_s: float = 120
     fire — then ``stop``.  Offsets and state commit per batch, so stopping is
     the reference's graceful shutdown (TopicFlow.safeguard, SURVEY.md §2.1
     #43): nothing uncommitted is lost, the next run recovers from the
-    checkpoint.
+    checkpoint.  A stream still reading input after ``timeout_s`` is stopped
+    the same way and raises ``TimeoutError``: its backlog is not consumed.
     """
     if available_now:
         q.awaitTermination()
         return
     deadline = time.time() + timeout_s
-    while time.time() < deadline:
-        progresses = q.recentProgress
-        tail = progresses[-idle_batches:]
-        if len(tail) == idle_batches and all(p["numInputRows"] == 0 for p in tail):
-            break
-        time.sleep(0.2)
-    q.stop()
-    q.awaitTermination()
+    try:
+        while True:
+            tail = q.recentProgress[-idle_batches:]
+            if len(tail) == idle_batches and all(p["numInputRows"] == 0 for p in tail):
+                return
+            if time.time() >= deadline:
+                raise TimeoutError(
+                    f"stream still reading input after {timeout_s}s; "
+                    "stopped with its backlog unprocessed"
+                )
+            time.sleep(0.2)
+    finally:
+        q.stop()
+        q.awaitTermination()
+
+
+def _run_sink(writer: DataStreamWriter, checkpoint: str, available_now: bool = True) -> None:
+    """Start ``writer`` as an append query on ``checkpoint`` and run it to
+    completion: ``availableNow``, or a 200 ms trigger drained by ``_drain``."""
+    trigger = {"availableNow": True} if available_now else {"processingTime": "200 milliseconds"}
+    q = (
+        writer.outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .trigger(**trigger)
+        .start()
+    )
+    _drain(q, available_now)
 
 
 def run_to_memory_sink(
@@ -285,18 +314,9 @@ def run_to_memory_sink(
     The micro-batch loop is the reference's poll loop (ConsumerFlow.scala:83-105);
     draining the backlog then stopping is the test-harness analog of
     'run until inputs are consumed'.  Pass ``available_now=False`` for flows
-    with processing-time timers (see ``_drain``).
+    with processing-time timers (see ``needs_drain``).
     """
-    writer = (
-        flowed.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    writer = writer.trigger(
-        **({"availableNow": True} if available_now else {"processingTime": "200 milliseconds"})
-    )
-    _drain(writer.start(), available_now)
+    _run_sink(flowed.writeStream.format("memory").queryName(query_name), checkpoint, available_now)
 
 
 def run_to_parquet_sink(
@@ -308,13 +328,4 @@ def run_to_parquet_sink(
     resumes from committed offsets + state — the reference's recovery path
     (§3.2), exercised by the golden test's multi-run scenario.  Pass
     ``available_now=False`` for flows with processing-time timers."""
-    writer = (
-        flowed.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-    )
-    writer = writer.trigger(
-        **({"availableNow": True} if available_now else {"processingTime": "200 milliseconds"})
-    )
-    _drain(writer.start(), available_now)
+    _run_sink(flowed.writeStream.format("parquet").option("path", out_dir), checkpoint, available_now)

@@ -95,3 +95,29 @@ def test_enhanced_fold_sees_key_extras(spark, tmp_path):
     Flow.from_files(spark, input_dir, SCHEMA).fold(spec).to_parquet(out_dir, chk)
     got = {r["key"]: r["state"] for r in spark.read.parquet(out_dir).collect()}
     assert got == {"a": "a:1", "b": "b:2"}
+
+
+def test_fold_with_state_ttl_drains_and_stops(spark, tmp_path):
+    """state_ttl_ms compiles to a processing-time timer, under which an
+    availableNow query never ends — the facade must drain it instead.  A
+    watchdog stops a hung query, so a regression fails on time, not hangs."""
+    import dataclasses
+    import threading
+
+    input_dir, chk = str(tmp_path / "in"), str(tmp_path / "chk")
+    out_dir = str(tmp_path / "out")
+    write_inputs(spark, input_dir, [(1, "a", 1), (2, "b", 2)])
+    spec = dataclasses.replace(
+        counter_flow_spec(fold_option(lambda s, rec: rec["n"])), state_ttl_ms=1000
+    )
+    limit_s = 60
+    watchdog = threading.Timer(limit_s, lambda: [q.stop() for q in spark.streams.active])
+    watchdog.start()
+    t0 = time.monotonic()
+    try:
+        Flow.from_files(spark, input_dir, SCHEMA).fold(spec).to_parquet(out_dir, chk)
+    finally:
+        watchdog.cancel()
+    assert time.monotonic() - t0 < limit_s, "the query ran until the watchdog stopped it"
+    rows = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
+    assert rows == [("a", None, 1), ("b", None, 2)]

@@ -15,7 +15,13 @@ import pytest
 
 from kafka_flow_spark.operators.fold import fold_option
 from kafka_flow_spark.operators.tick import TickOption
-from kafka_flow_spark.streaming.flow import FlowSpec, run_to_parquet_sink, stateful_flow
+from kafka_flow_spark.streaming.flow import (
+    FlowSpec,
+    _drain,
+    needs_drain,
+    run_to_parquet_sink,
+    stateful_flow,
+)
 
 SCHEMA = "seq BIGINT, key STRING, n INT"
 
@@ -47,14 +53,7 @@ def run_once(spark, input_dir, checkpoint, name, spec) -> list[tuple]:
     out_dir = checkpoint + "__out"
     records = spark.readStream.schema(SCHEMA).parquet(input_dir)
     flowed = stateful_flow(records, spec)
-    # timer-bearing flows cannot terminate under availableNow (see flow._drain);
-    # state_ttl_ms compiles to a timer on this path, so it counts too
-    run_to_parquet_sink(
-        flowed,
-        checkpoint,
-        out_dir,
-        available_now=spec.timeout_ms is None and spec.state_ttl_ms is None,
-    )
+    run_to_parquet_sink(flowed, checkpoint, out_dir, available_now=not needs_drain(spec))
     rows = [tuple(r) for r in spark.read.parquet(out_dir).collect()]
     prev = _seen.setdefault(out_dir, [])
     new = rows.copy()
@@ -205,3 +204,29 @@ def test_filter_record(spark, tmp_path):
     write_inputs(spark, input_dir, [(1, "a", 1), (2, "a", 2), (3, "a", 3)])
     out = run_once(spark, input_dir, checkpoint, "filter_rec", spec)
     assert out == [("a", None, 1), ("a", 1, 3)]
+
+
+class _BusyQuery:
+    """A streaming query whose micro-batches never stop reading input."""
+
+    def __init__(self):
+        self.stopped = False
+
+    @property
+    def recentProgress(self):
+        return [{"numInputRows": 5}] * 3
+
+    def stop(self):
+        self.stopped = True
+
+    def awaitTermination(self):
+        pass
+
+
+def test_drain_raises_at_deadline_after_stopping():
+    """A drain that runs out of time must not pass for a finished run: the
+    query is stopped (graceful shutdown) and the caller gets TimeoutError."""
+    q = _BusyQuery()
+    with pytest.raises(TimeoutError):
+        _drain(q, available_now=False, timeout_s=0.3)
+    assert q.stopped

@@ -4,13 +4,34 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pandas as pd
+
 from pyspark.sql import functions as F
 
 from kafka_flow_spark import sinks
 from kafka_flow_spark.operators.fold import fold_option
 from kafka_flow_spark.operators.tick import TickOption
-from kafka_flow_spark.streaming.flow import FlowSpec, run_to_parquet_sink, stateful_flow
+from kafka_flow_spark.streaming.flow import (
+    FlowSpec,
+    _make_with_state_fn,
+    run_to_parquet_sink,
+    stateful_flow,
+)
 from tests.test_streaming_flow import SCHEMA, write_inputs
+
+
+def _offset_spec() -> FlowSpec:
+    """Running sum per key; an offset-lag tick (gap >= 10) resets it to 0."""
+    return FlowSpec(
+        key_cols=["key"],
+        order_col="seq",
+        fold=fold_option(lambda s, rec: (s or 0) + rec["n"]),
+        output_schema="key STRING, n INT, kind STRING",
+        emit=lambda key, rec, before, after: {"key": key["key"], "n": after, "kind": "fold"},
+        tick=TickOption(lambda s: 0),
+        tick_emit=lambda key, before, after: {"key": key["key"], "n": before, "kind": "tick"},
+        offset_timer_threshold=10,
+    )
 
 
 def test_offset_timer_ticks_on_lag(spark, tmp_path):
@@ -20,16 +41,7 @@ def test_offset_timer_ticks_on_lag(spark, tmp_path):
     input_dir, chk = str(tmp_path / "in"), str(tmp_path / "chk")
     out_dir = str(tmp_path / "out")
 
-    spec = FlowSpec(
-        key_cols=["key"],
-        order_col="seq",
-        fold=fold_option(lambda s, rec: (s or 0) + rec["n"]),
-        output_schema="key STRING, n INT, kind STRING",
-        emit=lambda key, rec, before, after: {"key": key["key"], "n": after, "kind": "fold"},
-        tick=TickOption(lambda s: 0),  # reset on offset-lag tick
-        tick_emit=lambda key, before, after: {"key": key["key"], "n": before, "kind": "tick"},
-        offset_timer_threshold=10,
-    )
+    spec = _offset_spec()
     # seq 1 registers; seq 12 crosses the 10-offset gap -> tick fires (resets),
     # then seq 13 folds onto the reset state
     write_inputs(spark, input_dir, [(1, "a", 5), (12, "a", 7), (13, "a", 1)])
@@ -48,16 +60,7 @@ def test_offset_timer_state_survives_restart(spark, tmp_path):
     checkpointed runs."""
     input_dir, chk = str(tmp_path / "in"), str(tmp_path / "chk")
     out_dir = str(tmp_path / "out")
-    spec = FlowSpec(
-        key_cols=["key"],
-        order_col="seq",
-        fold=fold_option(lambda s, rec: (s or 0) + rec["n"]),
-        output_schema="key STRING, n INT, kind STRING",
-        emit=lambda key, rec, before, after: {"key": key["key"], "n": after, "kind": "fold"},
-        tick=TickOption(lambda s: 0),
-        tick_emit=lambda key, before, after: {"key": key["key"], "n": before, "kind": "tick"},
-        offset_timer_threshold=10,
-    )
+    spec = _offset_spec()
     def run_once():
         records = spark.readStream.schema(SCHEMA).parquet(input_dir)
         run_to_parquet_sink(stateful_flow(records, spec), chk, out_dir)
@@ -68,6 +71,65 @@ def test_offset_timer_state_survives_restart(spark, tmp_path):
     run_once()
     kinds = {(r["kind"], r["n"]) for r in spark.read.parquet(out_dir).collect()}
     assert ("tick", 7) in kinds  # 5 + 2 folded, then the gap tick fired
+
+
+class _FakeGroupState:
+    """Just enough of pyspark's GroupState to drive ``_make_with_state_fn``."""
+
+    def __init__(self, stored=None):
+        self.stored = stored
+        self.hasTimedOut = False
+
+    @property
+    def exists(self):
+        return self.stored is not None
+
+    @property
+    def get(self):
+        return self.stored
+
+    def update(self, t):
+        self.stored = tuple(t)
+
+    def remove(self):
+        self.stored = None
+
+    def setTimeoutDuration(self, ms):
+        pass
+
+    def setTimeoutTimestamp(self, ms):
+        pass
+
+
+def _fold_group(spec, pdf, stored=None):
+    """One key's group through the executor fn: ((kind, n) rows, stored state)."""
+    state = _FakeGroupState(stored)
+    out = pd.concat(list(_make_with_state_fn(spec)(("a",), iter([pdf]), state)))
+    return [(r["kind"], r["n"]) for r in out.to_dict("records")], state.stored
+
+
+_GOLDEN = pd.DataFrame({"seq": [1, 12, 13], "key": ["a"] * 3, "n": [5, 7, 1]})
+
+
+def test_offset_timer_golden_rows_and_envelope():
+    """The golden seq 1/12/13 group in one call: seq 12 crosses the gap, the
+    tick sees 5+7 and resets, 13 folds onto 0; the stored envelope holds the
+    re-registration offset."""
+    rows, stored = _fold_group(_offset_spec(), _GOLDEN)
+    assert rows == [("fold", 5), ("fold", 12), ("tick", 12), ("fold", 1)]
+    assert '"reg": 12' in stored[0]
+
+
+def test_offset_timer_envelope_carries_over_split_runs():
+    """The offset-timer registration rides in the stored state envelope, so
+    the golden group folded in one call and split across two (seq 1, then
+    12 and 13 from the stored state) emit the same rows and state."""
+    spec = _offset_spec()
+    whole, whole_state = _fold_group(spec, _GOLDEN)
+    first, first_state = _fold_group(spec, _GOLDEN.iloc[:1])
+    rest, rest_state = _fold_group(spec, _GOLDEN.iloc[1:], first_state)
+    assert first + rest == whole
+    assert rest_state == whole_state
 
 
 def test_event_time_timer_fires_on_watermark(spark, tmp_path):
