@@ -6,8 +6,8 @@ records (see SURVEY.md).  This package re-expresses those semantics Spark-first:
 
 - ``operators.fold`` / ``operators.tick``: the FoldOption/TickOption combinator
   surface (reference: core/.../Fold.scala, FoldOption.scala, Tick.scala).
-- ``operators.keyed``: batch execution of per-key ordered folds via
-  ``groupBy(key).applyInPandas`` (reference hot path: core/.../FoldToState.scala).
+- ``operators.keyed``: batch execution of per-key ordered folds as a sort-merge
+  ``mapInPandas`` (reference hot path: core/.../FoldToState.scala).
 - ``streaming.flow``: the streaming Flow API compiled to Structured Streaming
   with ``applyInPandasWithState`` (reference: core/.../KafkaFlow.scala poll loop + KeyFlow).
 - ``persistence``: explicit snapshot/journal persistence modes

@@ -28,7 +28,6 @@ from kafka_flow_spark import sources
 from kafka_flow_spark.streaming.flow import (
     FlowSpec,
     _run_sink,
-    needs_drain,
     run_to_memory_sink,
     run_to_parquet_sink,
     stateful_flow,
@@ -40,7 +39,6 @@ class Flow:
     """A lazily-assembled record-stream program."""
 
     df: DataFrame
-    _timered: bool = False
 
     # --- sources (ConsumerFlow #1 / file & rate test sources) ---
     @classmethod
@@ -57,23 +55,23 @@ class Flow:
 
     # --- record transforms (pre-grouping; #3, #6, #7, #11) ---
     def filter(self, predicate: Column) -> "Flow":
-        return Flow(sources.filter_records(self.df, predicate), self._timered)
+        return Flow(sources.filter_records(self.df, predicate))
 
     def remap_key(self, key_col: str, new_key: Column) -> "Flow":
-        return Flow(sources.remap_key(self.df, key_col, new_key), self._timered)
+        return Flow(sources.remap_key(self.df, key_col, new_key))
 
     def select(self, *cols) -> "Flow":
-        return Flow(self.df.select(*cols), self._timered)
+        return Flow(self.df.select(*cols))
 
     def with_column(self, name: str, col: Column) -> "Flow":
-        return Flow(self.df.withColumn(name, col), self._timered)
+        return Flow(self.df.withColumn(name, col))
 
     def dedup(self, text_col: str) -> "Flow":
         """First-wins exact content dedup (streaming.dedup) — Phase-4 ingest
         dedup as a pipeline step; state = one row per distinct fingerprint."""
         from kafka_flow_spark.streaming.dedup import dedup_exact_stream
 
-        return Flow(dedup_exact_stream(self.df, text_col), self._timered)
+        return Flow(dedup_exact_stream(self.df, text_col))
 
     def quality_gate(
         self, text_col: str, rules: dict | None = None, lang: str = "en"
@@ -89,25 +87,25 @@ class Flow:
             .where(F.col("keep"))
             .drop(*STAT_COLS)
         )
-        return Flow(gated, self._timered)
+        return Flow(gated)
 
     def dedup_within(self, text_col: str, ts_col: str, horizon: str) -> "Flow":
         """Watermark-bounded exact dedup: duplicates within ``horizon`` drop,
         older fingerprint state is evicted."""
         from kafka_flow_spark.streaming.dedup import dedup_exact_stream_windowed
 
-        return Flow(dedup_exact_stream_windowed(self.df, text_col, ts_col, horizon), self._timered)
+        return Flow(dedup_exact_stream_windowed(self.df, text_col, ts_col, horizon))
 
     # --- the keyed stateful core (#9, #17, #18) ---
     def fold(self, spec: FlowSpec) -> "Flow":
-        return Flow(stateful_flow(self.df, spec), _timered=needs_drain(spec))
+        return Flow(stateful_flow(self.df, spec))
 
     # --- sinks (checkpoint = persistence + offset commit, §3.1 steps 5-6) ---
     def to_parquet(self, out_dir: str, checkpoint: str) -> None:
-        run_to_parquet_sink(self.df, checkpoint, out_dir, available_now=not self._timered)
+        run_to_parquet_sink(self.df, checkpoint, out_dir)
 
     def to_memory(self, query_name: str, checkpoint: str) -> None:
-        run_to_memory_sink(self.df, checkpoint, query_name, available_now=not self._timered)
+        run_to_memory_sink(self.df, checkpoint, query_name)
 
     def to_near_dedup(
         self,
@@ -131,4 +129,4 @@ class Flow:
     def foreach_batch(self, fn, checkpoint: str) -> None:
         """Custom sink per epoch (explicit snapshot/journal tables, Kafka
         writes, MERGE upserts) — the foreachBatch escape hatch."""
-        _run_sink(self.df.writeStream.foreachBatch(fn), checkpoint, available_now=not self._timered)
+        _run_sink(self.df, self.df.writeStream.foreachBatch(fn), checkpoint)

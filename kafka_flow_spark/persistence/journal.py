@@ -5,10 +5,10 @@ Reference model (#32 CassandraJournals, core/.../journal/JournalDatabase.scala:
 the ordered events through the user fold (ReadState,
 core/.../persistence/Persistence.scala:178-192).
 
-Spark-first: the journal is an append-only parquet log; replay is one
-``groupBy(key).applyInPandas`` with an in-group offset sort — each key's
-events land in one task, state never touches the driver, and 1000 executors
-replay disjoint key ranges in parallel.  Offset-dedup on replay (#26
+Spark-first: the journal is an append-only parquet log; replay is the
+sort-merge ``operators.keyed`` fold (key exchange + in-partition offset sort +
+one ``mapInPandas``) — each key's events land in one task, state never touches
+the driver, and 1000 executors replay disjoint key ranges in parallel.  Offset-dedup on replay (#26
 SnapshotFold, core/.../snapshot/SnapshotFold.scala:13-23) is a pushed-down
 ``offset > snapshot_offset`` filter — Catalyst prunes parquet row groups, so
 replay cost is proportional to the *uncovered* suffix, not the full log.
@@ -39,6 +39,7 @@ def journal_sink(flowed: DataFrame, checkpoint: str, table_dir: str) -> None:
     by offset, so the journal is at-least-once + idempotent-on-read.
     """
     _run_sink(
+        flowed,
         flowed.writeStream.foreachBatch(lambda batch, _bid: append_journal(batch, table_dir)),
         checkpoint,
     )

@@ -38,6 +38,19 @@ def append_snapshots(batch: DataFrame, table_dir: str) -> None:
     batch.write.mode("append").parquet(table_dir)
 
 
+def last_write_wins(
+    log: DataFrame, key_cols: Sequence[str], value_cols: Sequence[str]
+) -> DataFrame:
+    """One row per key of an ``(…key cols, offset, …value cols)`` log: the
+    ``value_cols`` at the key's max offset, and that offset; keys whose
+    latest ``value`` is null (a tombstone) are dropped."""
+    latest = log.groupBy(*key_cols).agg(
+        *[F.max_by(c, "offset").alias(c) for c in value_cols],
+        F.max("offset").alias("offset"),
+    )
+    return latest.filter(F.col("value").isNotNull())
+
+
 def latest_snapshots(
     spark: SparkSession, table_dir: str, key_cols: Sequence[str] = ("key",)
 ) -> DataFrame:
@@ -48,12 +61,8 @@ def latest_snapshots(
     hash-aggregate — partial aggregation makes the shuffle one row per key.
     """
     log = spark.read.parquet(table_dir)
-    value_cols = [c for c in log.columns if c not in key_cols]
-    latest = log.groupBy(*key_cols).agg(
-        *[F.max_by(c, "offset").alias(c) for c in value_cols if c != "offset"],
-        F.max("offset").alias("offset"),
-    )
-    return latest.filter(F.col("value").isNotNull()).select(*log.columns)
+    value_cols = [c for c in log.columns if c not in key_cols and c != "offset"]
+    return last_write_wins(log, key_cols, value_cols).select(*log.columns)
 
 
 def compact_snapshots(
@@ -105,6 +114,7 @@ def snapshot_sink(
     design.md:80-88).
     """
     _run_sink(
+        flowed,
         flowed.writeStream.foreachBatch(lambda batch, _bid: append_snapshots(batch, table_dir)),
         checkpoint,
     )

@@ -1105,9 +1105,11 @@ def _lsh_oracle(
                 f"SELECT vec_id, {t} AS tbl, xor(b_{t}, {1 << i}) AS bucket FROM qb"
             )
     probes = " UNION ALL ".join(probe_rows)
+    # MATERIALIZED: inlined, the 2048-term plane dots would be re-planned and
+    # recomputed for each of the ~50 references to ``b`` (20x the time).
     return f"""
-    WITH dots AS (SELECT vec_id, embedding, {', '.join(dot_cols)} FROM embeddings),
-    b AS (SELECT vec_id, embedding, {', '.join(bucket_cols)} FROM dots),
+    WITH dots AS MATERIALIZED (SELECT vec_id, embedding, {', '.join(dot_cols)} FROM embeddings),
+    b AS MATERIALIZED (SELECT vec_id, embedding, {', '.join(bucket_cols)} FROM dots),
     corpus AS ({corpus}),
     qb AS (SELECT * FROM b WHERE vec_id < 10),
     probes AS ({probes}),

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_flow_spark.persistence.snapshots import last_write_wins
+
 
 def to_kafka_rows(
     df: DataFrame,
@@ -84,9 +86,4 @@ def recover_from_kafka_snapshots(
     DataFrame with (key, value, offset) columns.  One hash-aggregate; the
     shuffle carries one row per key.
     """
-    key_cols = key_cols or ["key"]
-    return (
-        records.groupBy(*key_cols)
-        .agg(F.max_by("value", "offset").alias("value"), F.max("offset").alias("offset"))
-        .filter(F.col("value").isNotNull())
-    )
+    return last_write_wins(records, key_cols or ["key"], ["value"])

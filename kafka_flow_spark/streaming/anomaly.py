@@ -13,7 +13,7 @@ Built on the reference-parity flow assembly (``streaming.flow.FlowSpec`` =
 KeyFlow fold + emit + persistence; core/src/main/scala/.../KeyFlow.scala:66-89)
 rather than a bespoke operator: the EWMA is just a fold whose state is the
 bounded history deque, so it inherits checkpoint recovery, TTL eviction, and
-both stateful-executor paths for free.  State is k bigints per key — at 100 TB
+the stateful executor for free.  State is k bigints per key — at 100 TB
 scale the state store holds |keys|·k longs, the smallest state class there is.
 """
 

@@ -23,6 +23,7 @@ in-group sort — the same guarantee the reference builds from per-key fibers.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import time
 from collections.abc import Callable, Iterator
@@ -35,10 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter
 
 from kafka_flow_spark.operators.fold import FoldOption
+from kafka_flow_spark.operators.keyed import EmitFn, _fold_key, _iter_records, _schema_cols
 from kafka_flow_spark.operators.tick import TickOption
-
-EmitFn = Callable[[dict[str, Any], dict[str, Any], Any, Any], dict[str, Any] | None]
-# emit(key_dict, record, state_before, state_after) -> row | None  (None = suppress)
 
 
 def _json_encode(state: Any) -> tuple:
@@ -87,7 +86,6 @@ class FlowSpec:
     event_time_col: str | None = None  # required for timeout_mode='event'
     watermark_delay: str = "0 seconds"
     offset_timer_threshold: int | None = None
-    filter_record: Callable[[dict[str, Any]], bool] | None = None  # FilterRecord (#7)
     state_ttl_ms: int | None = None  # idle-state eviction (unloadOrphaned, #19)
     state_schema: str = "value STRING"
     encode_state: Callable[[Any], tuple] = field(default=_json_encode)
@@ -150,28 +148,24 @@ def _make_with_state_fn(spec: FlowSpec):
             yield pd.DataFrame(out, columns=out_cols)
             return
 
-        from kafka_flow_spark.operators.keyed import _iter_records
-
         pdf = pd.concat(list(pdf_iter), ignore_index=True)
         pdf = pdf.sort_values(spec.order_col, kind="mergesort")  # per-key offset order
         s, reg = decode(state.get) if state.exists else (None, None)
-        for rec in _iter_records(pdf):
-            if spec.filter_record is not None and not spec.filter_record(rec):
-                continue
-            before = s
-            s = spec.fold(s, rec)
-            row = spec.emit(key_dict, rec, before, s)
-            if row is not None:
-                out.append(row)
-            if off_thresh is not None:
+        after = None
+        if off_thresh is not None:
+            def after(rec: dict[str, Any], s: Any) -> Any:
                 # offset timer (KafkaTimer.Offset emulation): register at first
                 # record, tick on order-column advance >= threshold, re-register
+                nonlocal reg
                 cur = rec[spec.order_col]
                 if reg is None:
                     reg = cur
                 elif cur - reg >= off_thresh:
                     s = run_tick(key_dict, s, out)
                     reg = cur
+                return s
+
+        s = _fold_key(_iter_records(pdf), key_dict, s, spec.fold, spec.emit, out, after)
         if s is None:
             if state.exists:
                 state.remove()  # delete-on-None (FoldToState.scala:83-89)
@@ -181,15 +175,6 @@ def _make_with_state_fn(spec: FlowSpec):
         yield pd.DataFrame(out, columns=out_cols)
 
     return fn
-
-
-def _schema_cols(ddl: str) -> list[str]:
-    """Column names of a DDL schema string — a real parse (handles nested and
-    parameterized types: ARRAY<STRUCT<...>>, DECIMAL(10,2), …).  Driver-side
-    only: the parser needs the JVM."""
-    from pyspark.sql.types import StructType
-
-    return [f.name for f in StructType.fromDDL(ddl).fields]
 
 
 def _with_ttl_emulation(spec: FlowSpec) -> FlowSpec:
@@ -203,10 +188,6 @@ def _with_ttl_emulation(spec: FlowSpec) -> FlowSpec:
             "state_ttl_ms emulates TTL via the processing-time timer, so "
             "timeout_ms/tick must be unset — encode eviction in your own tick"
         )
-    import dataclasses
-
-    from kafka_flow_spark.operators.tick import TickOption
-
     return dataclasses.replace(
         spec,
         timeout_ms=spec.state_ttl_ms,
@@ -241,17 +222,6 @@ def stateful_flow(records: DataFrame, spec: FlowSpec) -> DataFrame:
         outputMode="append",
         timeoutConf=timeout,
     )
-
-
-def needs_drain(spec: FlowSpec) -> bool:
-    """Whether the compiled flow carries processing-time timers, so it cannot
-    run under ``availableNow`` and must be drained (see ``_drain``).
-
-    Decided on the TTL-compiled spec: ``state_ttl_ms`` becomes a
-    processing-time timeout.  Event-time timers stop with the watermark, so
-    ``availableNow`` terminates for them."""
-    spec = _with_ttl_emulation(spec)
-    return spec.timeout_ms is not None and spec.timeout_mode == "processing"
 
 
 def _drain(q, available_now: bool, idle_batches: int = 3, timeout_s: float = 120.0) -> None:
@@ -290,9 +260,17 @@ def _drain(q, available_now: bool, idle_batches: int = 3, timeout_s: float = 120
         q.awaitTermination()
 
 
-def _run_sink(writer: DataStreamWriter, checkpoint: str, available_now: bool = True) -> None:
-    """Start ``writer`` as an append query on ``checkpoint`` and run it to
-    completion: ``availableNow``, or a 200 ms trigger drained by ``_drain``."""
+def _run_sink(flowed: DataFrame, writer: DataStreamWriter, checkpoint: str) -> None:
+    """Start ``writer`` (a ``flowed.writeStream``) as an append query on
+    ``checkpoint`` and run it to completion: ``availableNow``, or a 200 ms
+    trigger drained by ``_drain`` when a stateful operator in ``flowed``'s
+    analyzed plan has processing-time timeouts (``timeout_ms`` in processing
+    mode, or ``state_ttl_ms``; event-time timers stop with the watermark)."""
+    plan = flowed._jdf.queryExecution().analyzed().toString()
+    available_now = not any(
+        "WithState" in line and line.rstrip().endswith("ProcessingTimeTimeout")
+        for line in plan.splitlines()
+    )
     trigger = {"availableNow": True} if available_now else {"processingTime": "200 milliseconds"}
     q = (
         writer.outputMode("append")
@@ -303,29 +281,20 @@ def _run_sink(writer: DataStreamWriter, checkpoint: str, available_now: bool = T
     _drain(q, available_now)
 
 
-def run_to_memory_sink(
-    flowed: DataFrame,
-    checkpoint: str,
-    query_name: str,
-    available_now: bool = True,
-) -> None:
+def run_to_memory_sink(flowed: DataFrame, checkpoint: str, query_name: str) -> None:
     """Run a flow to completion into an in-memory sink table.
 
     The micro-batch loop is the reference's poll loop (ConsumerFlow.scala:83-105);
     draining the backlog then stopping is the test-harness analog of
-    'run until inputs are consumed'.  Pass ``available_now=False`` for flows
-    with processing-time timers (see ``needs_drain``).
+    'run until inputs are consumed'.
     """
-    _run_sink(flowed.writeStream.format("memory").queryName(query_name), checkpoint, available_now)
+    _run_sink(flowed, flowed.writeStream.format("memory").queryName(query_name), checkpoint)
 
 
-def run_to_parquet_sink(
-    flowed: DataFrame, checkpoint: str, out_dir: str, available_now: bool = True
-) -> None:
+def run_to_parquet_sink(flowed: DataFrame, checkpoint: str, out_dir: str) -> None:
     """Run a flow to completion into a parquet file sink.
 
     The file sink is fault-tolerant: restarting with the same checkpoint
     resumes from committed offsets + state — the reference's recovery path
-    (§3.2), exercised by the golden test's multi-run scenario.  Pass
-    ``available_now=False`` for flows with processing-time timers."""
-    _run_sink(flowed.writeStream.format("parquet").option("path", out_dir), checkpoint, available_now)
+    (§3.2), exercised by the golden test's multi-run scenario."""
+    _run_sink(flowed, flowed.writeStream.format("parquet").option("path", out_dir), checkpoint)

@@ -101,3 +101,49 @@ def test_randomized_multi_run_equivalence(spark, tmp_path):
         for r in registry.entities(spark, chk).collect()
     }
     assert live == final_states
+
+
+def test_batch_folds_carry_state_across_arrow_batches(spark):
+    """The batch folds (operators.keyed) vs the same simulator, with Arrow
+    batches of 3 records so every key's run (5-10 records) spans batch
+    boundaries: the fold state must carry over them.  Key ``a`` is deleted
+    mid-run and refolds from empty; key ``b`` ends deleted (no final row)."""
+    from kafka_flow_spark.operators.keyed import keyed_fold, keyed_fold_final
+
+    rng = random.Random(99)
+    runs = {
+        "a": [("set", 3), ("add", 2), ("del", 0), ("add", 4), ("add", 1),
+              ("double_if_over", 2), ("add", 1)],
+        "b": [("set", 5), ("add", 1), ("double_if_over", 1), ("add", 2), ("del", 0)],
+    }
+    for i in range(6):
+        runs[f"k{i}"] = [
+            (rng.choice(["add", "set", "double_if_over"]), rng.randint(0, 9))
+            for _ in range(rng.randint(5, 10))
+        ]
+    records = [(seq, key, op, n) for key, ops in runs.items() for seq, (op, n) in enumerate(ops)]
+    rng.shuffle(records)
+    step = make_step()
+    expected, final_states = simulate(step, records)
+    assert "a" in final_states and "b" not in final_states
+
+    df = spark.createDataFrame(records, SCHEMA)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        rows = keyed_fold(
+            df, ["key"], "seq", fold_option(step),
+            "key STRING, seq BIGINT, before INT, after INT",
+            lambda key, rec, before, after: {
+                "key": key["key"], "seq": rec["seq"], "before": before, "after": after,
+            },
+        ).collect()
+        finals = keyed_fold_final(
+            df, ["key"], "seq", fold_option(step), "key STRING, state INT",
+            lambda key, s: {"key": key["key"], "state": s},
+        ).collect()
+    finally:
+        spark.conf.set(conf, old)
+    assert sorted((r["key"], r["seq"], r["before"], r["after"]) for r in rows) == expected
+    assert {r["key"]: r["state"] for r in finals} == final_states

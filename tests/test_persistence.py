@@ -12,7 +12,7 @@ from hypothesis import strategies as st
 from kafka_flow_spark.operators.fold import fold_option
 from kafka_flow_spark.persistence import compression, journal, registry, snapshots
 from kafka_flow_spark.streaming.flow import stateful_flow, run_to_parquet_sink
-from tests.test_streaming_flow import counter_spec, write_inputs
+from tests.test_streaming_flow import SCHEMA, counter_spec, write_inputs
 
 SNAP_SCHEMA = "key STRING, offset BIGINT, value STRING"
 
@@ -135,6 +135,33 @@ def test_journal_replay_offset_dedup(spark, tmp_path):
         output_schema="key STRING, state INT",
     )
     assert states.collect()[0]["state"] == 50  # 20 + 30: offset 1 skipped, dup folded once
+
+
+def test_journal_sink_drains_ttl_flow_and_stops(spark, tmp_path):
+    """state_ttl_ms compiles to a processing-time timer, under which an
+    availableNow query never ends — journal_sink must see that in the plan it
+    writes and drain instead.  A watchdog stops a hung query, so a regression
+    fails on time, not hangs."""
+    import dataclasses
+    import threading
+    import time
+
+    input_dir, chk = str(tmp_path / "in"), str(tmp_path / "chk")
+    d = str(tmp_path / "journal")
+    write_inputs(spark, input_dir, [(1, "a", 1), (2, "b", 2)])
+    spec = dataclasses.replace(counter_spec(), state_ttl_ms=60_000)
+    records = spark.readStream.schema(SCHEMA).parquet(input_dir)
+    limit_s = 60
+    watchdog = threading.Timer(limit_s, lambda: [q.stop() for q in spark.streams.active])
+    watchdog.start()
+    t0 = time.monotonic()
+    try:
+        journal.journal_sink(stateful_flow(records, spec), chk, d)
+    finally:
+        watchdog.cancel()
+    assert time.monotonic() - t0 < limit_s, "the query ran until the watchdog stopped it"
+    rows = sorted(tuple(r) for r in spark.read.parquet(d).select("key", "n").collect())
+    assert rows == [("a", 1), ("b", 2)]
 
 
 def test_compression_roundtrip_small_and_large():

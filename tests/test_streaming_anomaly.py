@@ -27,7 +27,7 @@ def _batch_truth(spark, rows, threshold):
 def _run(spark, input_dir, checkpoint, out_dir, threshold):
     records = spark.readStream.schema(SCHEMA).parquet(input_dir)
     flowed = ewma_stream(records, ["key"], "seq", "x", k=4, threshold=threshold)
-    run_to_parquet_sink(flowed, checkpoint, out_dir, available_now=True)
+    run_to_parquet_sink(flowed, checkpoint, out_dir)
     return sorted(
         (r["key"], r["seq"], r["value"], r["ewma"], r["deviation"], r["is_anomaly"])
         for r in spark.read.parquet(out_dir).collect()

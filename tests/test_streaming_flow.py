@@ -13,12 +13,14 @@ import time
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from kafka_flow_spark.operators.fold import fold_option
 from kafka_flow_spark.operators.tick import TickOption
+from kafka_flow_spark.sources import filter_records
 from kafka_flow_spark.streaming.flow import (
     FlowSpec,
     _drain,
-    needs_drain,
     run_to_parquet_sink,
     stateful_flow,
 )
@@ -45,15 +47,17 @@ def counter_spec(timeout_ms=None, tick=None, tick_emit=None) -> FlowSpec:
     )
 
 
-def run_once(spark, input_dir, checkpoint, name, spec) -> list[tuple]:
-    """Run the flow over the current backlog; return only THIS run's outputs.
+def run_once(spark, input_dir, checkpoint, name, spec, where=None) -> list[tuple]:
+    """Run the flow over the current backlog (records matching ``where``, when
+    given); return only THIS run's outputs.
 
     The parquet sink accumulates across runs (append); outputs are diffed via
     a snapshot of previously-seen rows, so each run's delta is asserted."""
     out_dir = checkpoint + "__out"
     records = spark.readStream.schema(SCHEMA).parquet(input_dir)
-    flowed = stateful_flow(records, spec)
-    run_to_parquet_sink(flowed, checkpoint, out_dir, available_now=not needs_drain(spec))
+    if where is not None:
+        records = filter_records(records, where)
+    run_to_parquet_sink(stateful_flow(records, spec), checkpoint, out_dir)
     rows = [tuple(r) for r in spark.read.parquet(out_dir).collect()]
     prev = _seen.setdefault(out_dir, [])
     new = rows.copy()
@@ -194,15 +198,15 @@ def test_state_ttl_conflicts_with_custom_timers(spark, tmp_path):
 
 
 def test_filter_record(spark, tmp_path):
-    """FilterRecord (#7): dropped records don't reach the fold but the stream
-    still progresses (offsets commit past them)."""
+    """FilterRecord (#7) is a filter on the record DataFrame: dropped records
+    never reach the fold, but the stream still progresses (offsets commit
+    past them)."""
     input_dir = str(tmp_path / "input")
     checkpoint = str(tmp_path / "chk")
-    spec = counter_spec()
-    spec.filter_record = lambda rec: rec["n"] % 2 == 1  # odds only
+    odds = F.col("n") % 2 == 1
 
     write_inputs(spark, input_dir, [(1, "a", 1), (2, "a", 2), (3, "a", 3)])
-    out = run_once(spark, input_dir, checkpoint, "filter_rec", spec)
+    out = run_once(spark, input_dir, checkpoint, "filter_rec", counter_spec(), where=odds)
     assert out == [("a", None, 1), ("a", 1, 3)]
 
 
