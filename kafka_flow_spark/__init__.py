@@ -16,6 +16,12 @@ records (see SURVEY.md).  This package re-expresses those semantics Spark-first:
   ``operators.multimodal``: LLM-data-pipeline operators designed for
   100 TB-scale partition-parallel execution.
 - ``plans``: the oracle-gated query library exposed through __spark_entry__.py.
+- ``_pyworker``: installed on import — PySpark workers stop re-reading
+  ``pyspark.zip`` at every task (stat-checked ``zipimport`` invalidation).
 """
 
 __version__ = "0.1.0"
+
+from kafka_flow_spark import _pyworker
+
+_pyworker.install()

@@ -118,13 +118,14 @@ class Flow:
     ) -> None:
         """Near-dup dedup sink (streaming MinHash-LSH vs a persisted band
         index — streaming.dedup.dedup_near_stream): kept docs append to
-        ``out_dir``, the dedup index to ``index_dir``."""
-        from kafka_flow_spark.streaming.dedup import dedup_near_stream
+        ``out_dir``, the dedup index to ``index_dir``.  Runs like every other
+        sink, so a timer-bearing fold in front of it drains and stops."""
+        from kafka_flow_spark.streaming.dedup import _stream_namespace, make_near_dedup_batch_fn
 
-        q = dedup_near_stream(
-            self.df, text_col, id_col, index_dir, out_dir, checkpoint, **kw
+        kw.setdefault("stream_ns", _stream_namespace(self.df.sparkSession, checkpoint))
+        self.foreach_batch(
+            make_near_dedup_batch_fn(text_col, id_col, index_dir, out_dir, **kw), checkpoint
         )
-        q.awaitTermination()
 
     def foreach_batch(self, fn, checkpoint: str) -> None:
         """Custom sink per epoch (explicit snapshot/journal tables, Kafka

@@ -148,8 +148,10 @@ def _make_with_state_fn(spec: FlowSpec):
             yield pd.DataFrame(out, columns=out_cols)
             return
 
-        pdf = pd.concat(list(pdf_iter), ignore_index=True)
-        pdf = pdf.sort_values(spec.order_col, kind="mergesort")  # per-key offset order
+        chunks = list(pdf_iter)
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        if not pdf[spec.order_col].is_monotonic_increasing:
+            pdf = pdf.sort_values(spec.order_col, kind="mergesort")  # per-key offset order
         s, reg = decode(state.get) if state.exists else (None, None)
         after = None
         if off_thresh is not None:

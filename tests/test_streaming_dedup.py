@@ -173,6 +173,44 @@ def test_flow_to_near_dedup_sink(spark, tmp_path):
     assert kept == [1, 3]
 
 
+def test_flow_to_near_dedup_drains_ttl_fold_and_stops(spark, tmp_path):
+    """A ``state_ttl_ms`` fold in front of the near-dedup sink compiles to a
+    processing-time timer, under which an availableNow query never ends: the
+    sink must drain and stop like the other sinks.  A watchdog stops a hung
+    query, so a regression fails on time, not hangs."""
+    import threading
+    import time
+
+    from kafka_flow_spark.flow import Flow
+    from kafka_flow_spark.operators.fold import fold_option
+    from kafka_flow_spark.streaming.flow import FlowSpec
+
+    input_dir, chk = str(tmp_path / "in"), str(tmp_path / "chk")
+    index_dir, out_dir = str(tmp_path / "idx"), str(tmp_path / "out")
+    base, near, other = _near_docs()
+    write_batch(spark, input_dir, [(ts(0), 1, base), (ts(0), 2, near), (ts(0), 3, other)])
+    spec = FlowSpec(
+        key_cols=["doc_id"],
+        order_col="ts",
+        fold=fold_option(lambda s, rec: rec["text"]),
+        output_schema="doc_id INT, text STRING",
+        emit=lambda key, rec, before, after: {"doc_id": key["doc_id"], "text": after},
+        state_ttl_ms=60_000,
+    )
+    flow = Flow.from_files(spark, input_dir, SCHEMA).fold(spec)
+    limit_s = 60
+    watchdog = threading.Timer(limit_s, lambda: [q.stop() for q in spark.streams.active])
+    watchdog.start()
+    t0 = time.monotonic()
+    try:
+        flow.to_near_dedup("text", "doc_id", index_dir, out_dir, chk)
+    finally:
+        watchdog.cancel()
+    assert time.monotonic() - t0 < limit_s, "the query ran until the watchdog stopped it"
+    kept = sorted(r["doc_id"] for r in spark.read.parquet(out_dir).collect())
+    assert kept == [1, 3]
+
+
 def test_crawl_stream_dedup_on_canonical_url(spark, tmp_path):
     """Composition proof: the streaming exact-dedup state keyed on the
     CANONICAL url (operators/text.canonicalize_url) collapses crawl

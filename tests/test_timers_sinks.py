@@ -102,16 +102,19 @@ class _FakeGroupState:
 
 
 def _fold_group(spec, pdf, stored=None):
-    """One key's group through the executor fn: ((kind, n) rows, stored state)."""
+    """One key's group — a DataFrame, or a list of the Arrow chunks it arrives
+    in — through the executor fn: ((kind, n) rows, stored state).  Needs a
+    live session: the fn parses its output DDL on the JVM."""
     state = _FakeGroupState(stored)
-    out = pd.concat(list(_make_with_state_fn(spec)(("a",), iter([pdf]), state)))
+    chunks = pdf if isinstance(pdf, list) else [pdf]
+    out = pd.concat(list(_make_with_state_fn(spec)(("a",), iter(chunks), state)))
     return [(r["kind"], r["n"]) for r in out.to_dict("records")], state.stored
 
 
 _GOLDEN = pd.DataFrame({"seq": [1, 12, 13], "key": ["a"] * 3, "n": [5, 7, 1]})
 
 
-def test_offset_timer_golden_rows_and_envelope():
+def test_offset_timer_golden_rows_and_envelope(spark):
     """The golden seq 1/12/13 group in one call: seq 12 crosses the gap, the
     tick sees 5+7 and resets, 13 folds onto 0; the stored envelope holds the
     re-registration offset."""
@@ -120,7 +123,18 @@ def test_offset_timer_golden_rows_and_envelope():
     assert '"reg": 12' in stored[0]
 
 
-def test_offset_timer_envelope_carries_over_split_runs():
+def test_out_of_order_chunks_fold_in_offset_order(spark):
+    """A group split into chunks that arrive out of offset order, or one
+    unsorted chunk, still folds in ``order_col`` order: the golden rows and
+    stored state, as for the sorted single chunk."""
+    spec = _offset_spec()
+    golden = _fold_group(spec, _GOLDEN)
+    assert golden[0] == [("fold", 5), ("fold", 12), ("tick", 12), ("fold", 1)]
+    assert _fold_group(spec, [_GOLDEN.iloc[[2, 0]], _GOLDEN.iloc[[1]]]) == golden
+    assert _fold_group(spec, _GOLDEN.iloc[::-1]) == golden
+
+
+def test_offset_timer_envelope_carries_over_split_runs(spark):
     """The offset-timer registration rides in the stored state envelope, so
     the golden group folded in one call and split across two (seq 1, then
     12 and 13 from the stored state) emit the same rows and state."""
