@@ -12,6 +12,11 @@ right default on a 1000-executor cluster reading 100 TB:
   match the DuckDB oracle.
 - Shuffle partitions default to cpu count locally; on a real cluster leave it
   to AQE's coalescing with a high initial partition number.
+- Streaming checkpoints commit through Spark's ``FileSystem``-based checkpoint
+  file manager: on a local filesystem without the native Hadoop library the
+  ``FileContext`` default starts a ``readlink`` process per link lookup, ~8
+  per checkpoint file (ARCHITECTURE.md design note 11).  A cluster builder
+  keeps the default.
 """
 
 from __future__ import annotations
@@ -82,6 +87,24 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
+        # Checkpoint files (offset, commit, source and sink logs, state-store
+        # deltas) go through Hadoop FileSystem, not the FileContext default.
+        # Without the native Hadoop library the FileContext manager shells
+        # out for every file it writes: ~8 `readlink` per rename
+        # (getFileLinkStatus) plus one `chmod` per create, ~4 ms each, ~130
+        # process launches per stateful micro-batch.  This builder is always
+        # local[N], so checkpoints sit on the local filesystem.  There a
+        # no-overwrite create (the metadata logs) still checks existence and
+        # fails on close, renames stay atomic and the .crc sidecars stay; an
+        # overwriting create (state-store deltas) is best effort, as Spark
+        # defines it, and keeps an existing file (ARCHITECTURE.md note 11).
+        # A cluster builder should keep Spark's default, whose FileContext
+        # rename gives HDFS an atomic overwrite.  extra_conf can override it.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # testdata events.parquet stores TIMESTAMP(NANOS).  Spark 3.x needs
         # this conf to read it at all (as long, converted to µs in
         # tables.load); on Spark 4.1+ the conf is a no-op and the column reads
