@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from kafka_flow_spark import sources
 from kafka_flow_spark.streaming.flow import (
     FlowSpec,
-    _run_sink,
+    run_query,
     run_to_memory_sink,
     run_to_parquet_sink,
     stateful_flow,
@@ -117,9 +117,13 @@ class Flow:
         **kw,
     ) -> None:
         """Near-dup dedup sink (streaming MinHash-LSH vs a persisted band
-        index — streaming.dedup.dedup_near_stream): kept docs append to
-        ``out_dir``, the dedup index to ``index_dir``.  Runs like every other
-        sink, so a timer-bearing fold in front of it drains and stops."""
+        index — streaming.dedup.make_near_dedup_batch_fn): kept docs append to
+        ``out_dir``, the dedup index to ``index_dir``; the index carries the
+        dedup state across restarts.  The exactly-once stream namespace is a
+        marker inside ``checkpoint`` (``_stream_namespace``): a restart of the
+        same checkpoint resumes it, a fresh or wiped checkpoint mints a new
+        one.  Runs like every other sink, so a timer-bearing fold in front of
+        it drains and stops."""
         from kafka_flow_spark.streaming.dedup import _stream_namespace, make_near_dedup_batch_fn
 
         kw.setdefault("stream_ns", _stream_namespace(self.df.sparkSession, checkpoint))
@@ -130,4 +134,4 @@ class Flow:
     def foreach_batch(self, fn, checkpoint: str) -> None:
         """Custom sink per epoch (explicit snapshot/journal tables, Kafka
         writes, MERGE upserts) — the foreachBatch escape hatch."""
-        _run_sink(self.df, self.df.writeStream.foreachBatch(fn), checkpoint)
+        run_query(self.df, self.df.writeStream.foreachBatch(fn), checkpoint)

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from kafka_flow_spark.operators.fold import FoldOption, State
 from kafka_flow_spark.operators.keyed import keyed_fold_final
-from kafka_flow_spark.streaming.flow import _run_sink
+from kafka_flow_spark.streaming.flow import run_query
 
 
 def append_journal(batch: DataFrame, table_dir: str) -> None:
@@ -38,7 +38,7 @@ def journal_sink(flowed: DataFrame, checkpoint: str, table_dir: str) -> None:
     Replayed epochs re-append identical (key, offset) rows; ``replay`` dedups
     by offset, so the journal is at-least-once + idempotent-on-read.
     """
-    _run_sink(
+    run_query(
         flowed,
         flowed.writeStream.foreachBatch(lambda batch, _bid: append_journal(batch, table_dir)),
         checkpoint,

@@ -25,7 +25,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_flow_spark.streaming.flow import _run_sink
+from kafka_flow_spark.streaming.flow import run_query
 
 
 def append_snapshots(batch: DataFrame, table_dir: str) -> None:
@@ -113,7 +113,7 @@ def snapshot_sink(
     persistence, the reference's exact contract (docs/kafka-single-writer-
     design.md:80-88).
     """
-    _run_sink(
+    run_query(
         flowed,
         flowed.writeStream.foreachBatch(lambda batch, _bid: append_snapshots(batch, table_dir)),
         checkpoint,

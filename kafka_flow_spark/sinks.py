@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafka_flow_spark.persistence.snapshots import last_write_wins
+from kafka_flow_spark.streaming.flow import run_query
 
 
 def to_kafka_rows(
@@ -60,19 +61,20 @@ def write_kafka(kafka_rows: DataFrame, bootstrap_servers: str, topic: str) -> No
 def kafka_sink(
     kafka_rows: DataFrame, bootstrap_servers: str, topic: str, checkpoint: str
 ):
-    """Streaming write to a topic; returns the started query.
+    """Streaming write to a topic; returns the started, long-running query
+    (``run_query(long_running=True)``: the library's 200 ms trigger, not
+    Spark's default trigger).
 
     At-least-once: a replayed epoch rewrites the same keyed records, and log
     compaction collapses them — identical to the reference's non-transactional
     snapshot mode contract.
     """
-    return (
+    writer = (
         kafka_rows.writeStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .start()
     )
+    return run_query(kafka_rows, writer, checkpoint, long_running=True)
 
 
 def recover_from_kafka_snapshots(

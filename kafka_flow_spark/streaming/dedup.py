@@ -86,9 +86,10 @@ def make_near_dedup_batch_fn(
       prune by it.  ``stream_ns`` scopes epoch ids to one stream
       incarnation: a FRESH checkpoint restarts epochs at 0, and without the
       namespace its batch 0 would overwrite a previous incarnation's
-      partition in the shared index (``dedup_near_stream`` derives the
-      namespace from the checkpoint path; direct callers sharing one
-      index_dir across checkpoints must pass distinct values).
+      partition in the shared index (``Flow.to_near_dedup`` reads the
+      namespace from a marker in the checkpoint, ``_stream_namespace``;
+      direct callers sharing one index_dir across checkpoints must pass
+      distinct values).
     - The index probe excludes the batch's own partition: a crash BETWEEN
       the out and index writes leaves this batch's bands already indexed,
       and without the exclusion the replay would see its own docs as
@@ -231,41 +232,6 @@ def _stream_namespace(spark, checkpoint: str) -> str:
     except Exception:
         pass
     return hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-
-
-def dedup_near_stream(
-    records: DataFrame,
-    text_col: str,
-    id_col: str,
-    index_dir: str,
-    out_dir: str,
-    checkpoint: str,
-    available_now: bool = True,
-    **kw,
-):
-    """Attach the near-dedup foreachBatch sink to a streaming DataFrame and
-    return the started query.  Kept docs land in ``out_dir``; the band-hash
-    index in ``index_dir`` carries the dedup state across restarts (it is
-    rebuilt from data, not from the checkpoint, so batch jobs can share it).
-
-    The exactly-once stream namespace is a run-id marker persisted INSIDE
-    the checkpoint directory (``_stream_namespace``): a RESTART of the same
-    checkpoint resumes its namespace and epoch sequence (replays overwrite
-    their own partitions), while a fresh OR wiped-and-recreated checkpoint
-    gets a fresh namespace and cannot clobber a previous incarnation's
-    partitions."""
-    kw.setdefault(
-        "stream_ns", _stream_namespace(records.sparkSession, checkpoint)
-    )
-    fn = make_near_dedup_batch_fn(text_col, id_col, index_dir, out_dir, **kw)
-    writer = (
-        records.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(fn)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedup_exact_stream_windowed(

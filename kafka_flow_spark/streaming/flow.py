@@ -33,7 +33,7 @@ from typing import Any
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from kafka_flow_spark.operators.fold import FoldOption
 from kafka_flow_spark.operators.keyed import EmitFn, _fold_key, _iter_records, _schema_cols
@@ -226,8 +226,8 @@ def stateful_flow(records: DataFrame, spec: FlowSpec) -> DataFrame:
     )
 
 
-def _drain(q, available_now: bool, idle_batches: int = 3, timeout_s: float = 120.0) -> None:
-    """Run the backlog to completion and stop.
+def _drain(q, idle_batches: int = 3, timeout_s: float = 120.0) -> None:
+    """Run a timer-bearing query's backlog to completion and stop.
 
     With processing-time timers, Spark's stateful operator reports
     ``shouldRunAnotherBatch = true`` unconditionally, so an ``availableNow``
@@ -239,15 +239,14 @@ def _drain(q, available_now: bool, idle_batches: int = 3, timeout_s: float = 120
     fire — then ``stop``.  Offsets and state commit per batch, so stopping is
     the reference's graceful shutdown (TopicFlow.safeguard, SURVEY.md §2.1
     #43): nothing uncommitted is lost, the next run recovers from the
-    checkpoint.  A stream still reading input after ``timeout_s`` is stopped
-    the same way and raises ``TimeoutError``: its backlog is not consumed.
+    checkpoint.  A query that dies (a failing fold) ends the wait at once and
+    its error re-raises from ``awaitTermination``.  A stream still reading
+    input after ``timeout_s`` is stopped the same way and raises
+    ``TimeoutError``: its backlog is not consumed.
     """
-    if available_now:
-        q.awaitTermination()
-        return
     deadline = time.time() + timeout_s
     try:
-        while True:
+        while q.isActive:
             tail = q.recentProgress[-idle_batches:]
             if len(tail) == idle_batches and all(p["numInputRows"] == 0 for p in tail):
                 return
@@ -262,25 +261,35 @@ def _drain(q, available_now: bool, idle_batches: int = 3, timeout_s: float = 120
         q.awaitTermination()
 
 
-def _run_sink(flowed: DataFrame, writer: DataStreamWriter, checkpoint: str) -> None:
-    """Start ``writer`` (a ``flowed.writeStream``) as an append query on
-    ``checkpoint`` and run it to completion: ``availableNow``, or a 200 ms
-    trigger drained by ``_drain`` when a stateful operator in ``flowed``'s
-    analyzed plan has processing-time timeouts (``timeout_ms`` in processing
-    mode, or ``state_ttl_ms``; event-time timers stop with the watermark)."""
-    plan = flowed._jdf.queryExecution().analyzed().toString()
-    available_now = not any(
+def run_query(
+    flowed: DataFrame, writer: DataStreamWriter, checkpoint: str, long_running: bool = False
+) -> StreamingQuery:
+    """Start ``writer`` (a ``flowed.writeStream`` with its sink and output
+    mode set) on ``checkpoint`` — the one place the library starts a
+    streaming query, so every query shares one trigger rule and one stop.
+
+    - Run to completion (the default): ``availableNow``, or a 200 ms trigger
+      drained by ``_drain`` when a stateful operator in ``flowed``'s analyzed
+      plan has processing-time timeouts (``timeout_ms`` in processing mode,
+      or ``state_ttl_ms``; event-time timers stop with the watermark).
+      Returns the stopped query; a failed query raises.
+    - ``long_running=True``: start on the 200 ms trigger and return the
+      running query; the caller stops it (or supervises it with
+      ``supervision.run_with_retry``).
+    """
+    timers = long_running or any(
         "WithState" in line and line.rstrip().endswith("ProcessingTimeTimeout")
-        for line in plan.splitlines()
+        for line in flowed._jdf.queryExecution().analyzed().toString().splitlines()
     )
-    trigger = {"availableNow": True} if available_now else {"processingTime": "200 milliseconds"}
-    q = (
-        writer.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
-    )
-    _drain(q, available_now)
+    trigger = {"processingTime": "200 milliseconds"} if timers else {"availableNow": True}
+    q = writer.option("checkpointLocation", checkpoint).trigger(**trigger).start()
+    if long_running:
+        return q
+    if timers:
+        _drain(q)
+    else:
+        q.awaitTermination()
+    return q
 
 
 def run_to_memory_sink(flowed: DataFrame, checkpoint: str, query_name: str) -> None:
@@ -290,7 +299,7 @@ def run_to_memory_sink(flowed: DataFrame, checkpoint: str, query_name: str) -> N
     draining the backlog then stopping is the test-harness analog of
     'run until inputs are consumed'.
     """
-    _run_sink(flowed, flowed.writeStream.format("memory").queryName(query_name), checkpoint)
+    run_query(flowed, flowed.writeStream.format("memory").queryName(query_name), checkpoint)
 
 
 def run_to_parquet_sink(flowed: DataFrame, checkpoint: str, out_dir: str) -> None:
@@ -299,4 +308,4 @@ def run_to_parquet_sink(flowed: DataFrame, checkpoint: str, out_dir: str) -> Non
     The file sink is fault-tolerant: restarting with the same checkpoint
     resumes from committed offsets + state — the reference's recovery path
     (§3.2), exercised by the golden test's multi-run scenario."""
-    _run_sink(flowed, flowed.writeStream.format("parquet").option("path", out_dir), checkpoint)
+    run_query(flowed, flowed.writeStream.format("parquet").option("path", out_dir), checkpoint)

@@ -106,6 +106,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from kafka_flow_spark.operators.incremental import (
     agg_maintain,
@@ -116,6 +117,7 @@ from kafka_flow_spark.operators.incremental import (
     changeset,
     maintain_join_view,
 )
+from kafka_flow_spark.streaming.flow import run_query
 
 _VIEW_COMMIT = "_VIEW_COMMIT"
 _MANIFEST = "_BUCKET_MANIFEST.json"
@@ -1688,11 +1690,14 @@ def run_view_sink(
     refresh_dim: bool = False,
     dim_heartbeat_rps: int | None = None,
     cascade: "list[ViewSubscription] | None" = None,
-) -> None:
-    """Drive a CDC/append stream into a materialized-view sink — with
-    ``available_now=True`` (the scheduled-run shape) to backlog exhaustion
-    and stop, restartable: the checkpoint replays the last in-flight batch,
-    the versioned commit makes the replay idempotent.
+) -> StreamingQuery:
+    """Drive a CDC/append stream into a materialized-view sink through
+    ``streaming.flow.run_query`` — with ``available_now=True`` (the
+    scheduled-run shape) to backlog exhaustion and stop; with
+    ``available_now=False`` as a long-running query on the 200 ms trigger,
+    which is returned for the caller to stop or supervise.  Restartable:
+    the checkpoint replays the last in-flight batch, the versioned commit
+    makes the replay idempotent.
 
     ``cascade=[ViewSubscription, ...]`` drives DOWNSTREAM views IN-LOOP —
     the reference's consumer fan-out (``TopicFlow.apply`` routes each poll
@@ -1725,10 +1730,10 @@ def run_view_sink(
       dim-only change is picked up in the same invocation even when the
       fact backlog was empty, single-writer safe because the stream has
       stopped before the refresh commits.
-    - ``available_now=False`` (long-lived continuous stream): the post-drain
-      refresh would only fire at run END — silently stale dims for the
-      run's lifetime, so this combination REFUSES unless
-      ``dim_heartbeat_rps`` is set (review r10): the heartbeat unions a
+    - ``available_now=False`` (long-lived continuous stream): no refresh
+      runs when the returned query stops — without fact traffic the dims
+      would stay stale for the run's lifetime, so this combination REFUSES
+      unless ``dim_heartbeat_rps`` is set (review r10): the heartbeat unions a
       rate source into the stream (``with_dim_heartbeat``) so a micro-batch
       fires every interval even on a quiet fact source; the sink's own
       per-batch dim diff then picks the change up IN-LOOP (same
@@ -1746,11 +1751,11 @@ def run_view_sink(
         )
     if refresh_dim and not available_now and dim_heartbeat_rps is None:
         raise ValueError(
-            "refresh_dim=True with a continuous trigger would defer the dim "
-            "refresh to run END (silently stale dims for the run's "
-            "lifetime) — pass dim_heartbeat_rps=N for in-loop dim freshness "
-            "(a heartbeat batch every ~1/N s runs the dim diff with zero "
-            "fact rows), or use available_now=True scheduled runs"
+            "refresh_dim=True with a continuous trigger would leave the dim "
+            "stale on a quiet fact source for the query's lifetime (no "
+            "refresh runs at stop) — pass dim_heartbeat_rps=N for in-loop "
+            "dim freshness (a heartbeat batch every ~1/N s runs the dim diff "
+            "with zero fact rows), or use available_now=True scheduled runs"
         )
     if dim_heartbeat_rps is not None:
         # validate BEFORE starting the stream, like refresh_dim above
@@ -1773,19 +1778,19 @@ def run_view_sink(
         stream = with_dim_heartbeat(stream, dim_heartbeat_rps)
     casc = _validate_cascade(sink, cascade)
     fb = cascading_sink(sink, cascade) if casc and not available_now else sink
-    q = (
-        stream.writeStream.foreachBatch(fb)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(**({"availableNow": True} if available_now else {"processingTime": "200 milliseconds"}))
-        .start()
+    q = run_query(
+        stream,
+        stream.writeStream.foreachBatch(fb).outputMode("update"),
+        checkpoint,
+        long_running=not available_now,
     )
-    q.awaitTermination()
+    if not available_now:
+        return q
     if refresh_dim and sink.last_committed(stream.sparkSession) is not None:
         sink.refresh(stream.sparkSession)
-    if casc and available_now:
-        for sub in casc:
-            sub.advance(stream.sparkSession)
+    for sub in casc:
+        sub.advance(stream.sparkSession)
+    return q
 
 
 class MaterializedSketchView(_VersionedView):

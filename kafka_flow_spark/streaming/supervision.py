@@ -34,8 +34,11 @@ def run_with_retry(
 ) -> None:
     """Run a streaming query to termination, restarting on failure.
 
-    ``start_query`` builds AND starts a fresh query (it must reuse one
-    checkpoint so each attempt resumes, not replays).  Backoff: exponential
+    ``start_query`` builds AND starts a fresh query: a long-running
+    ``streaming.flow.run_query`` call, such as
+    ``lambda: run_view_sink(..., available_now=False)`` or ``kafka_sink``
+    (it must reuse one checkpoint so each attempt resumes, not replays).
+    Backoff: exponential
     from 100 ms, full jitter, 1 min cap, reset after 5 min healthy — the
     reference's retry policy.  ``max_restarts=None`` retries forever (the
     reference's default); a query that terminates without exception ends the

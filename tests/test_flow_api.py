@@ -121,3 +121,27 @@ def test_fold_with_state_ttl_drains_and_stops(spark, tmp_path):
     assert time.monotonic() - t0 < limit_s, "the query ran until the watchdog stopped it"
     rows = sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
     assert rows == [("a", None, 1), ("b", None, 2)]
+
+
+def test_fold_with_state_ttl_fails_fast_when_the_fold_raises(spark, tmp_path):
+    """A timer-bearing flow runs on a drained 200 ms trigger; when its fold
+    raises, the query dies before any progress and the drain must stop
+    waiting at once and re-raise the fold's error, not poll until its
+    120 s deadline first."""
+    import dataclasses
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    def failing_fold(s, rec):
+        raise ValueError("fold failed on purpose")
+
+    input_dir, chk = str(tmp_path / "in"), str(tmp_path / "chk")
+    write_inputs(spark, input_dir, [(1, "a", 1)])
+    spec = dataclasses.replace(counter_flow_spec(fold_option(failing_fold)), state_ttl_ms=1000)
+    t0 = time.monotonic()
+    with pytest.raises(StreamingQueryException, match="fold failed on purpose"):
+        Flow.from_files(spark, input_dir, SCHEMA).fold(spec).to_parquet(
+            str(tmp_path / "out"), chk
+        )
+    assert time.monotonic() - t0 < 60, "the fold's error surfaced only at the drain deadline"

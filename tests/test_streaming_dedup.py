@@ -111,11 +111,12 @@ def _near_docs():
 
 
 def run_near_stream(spark, input_dir, chk, index_dir, out_dir):
-    from kafka_flow_spark.streaming.dedup import dedup_near_stream
+    """Run the Flow API near-dedup sink over the backlog; return kept ids."""
+    from kafka_flow_spark.flow import Flow
 
-    records = spark.readStream.schema(SCHEMA).parquet(input_dir)
-    q = dedup_near_stream(records, "text", "doc_id", index_dir, out_dir, chk)
-    q.awaitTermination()
+    Flow.from_files(spark, input_dir, SCHEMA).to_near_dedup(
+        "text", "doc_id", index_dir, out_dir, chk
+    )
     return sorted(r["doc_id"] for r in spark.read.parquet(out_dir).collect())
 
 
@@ -157,20 +158,6 @@ def test_near_dedup_stream_agrees_with_batch_operator(spark, tmp_path):
         r["cluster_id"] for r in clusters.select("cluster_id").distinct().collect()
     )
     assert kept_stream == kept_batch
-
-
-def test_flow_to_near_dedup_sink(spark, tmp_path):
-    """Flow API form of the near-dedup sink behaves like dedup_near_stream."""
-    from kafka_flow_spark.flow import Flow
-
-    input_dir, chk = str(tmp_path / "in"), str(tmp_path / "chk")
-    index_dir, out_dir = str(tmp_path / "idx"), str(tmp_path / "out")
-    base, near, other = _near_docs()
-    write_batch(spark, input_dir, [(ts(0), 1, base), (ts(0), 2, near), (ts(0), 3, other)])
-    flow = Flow.from_files(spark, input_dir, SCHEMA)
-    flow.to_near_dedup("text", "doc_id", index_dir, out_dir, chk)
-    kept = sorted(r["doc_id"] for r in spark.read.parquet(out_dir).collect())
-    assert kept == [1, 3]
 
 
 def test_flow_to_near_dedup_drains_ttl_fold_and_stops(spark, tmp_path):

@@ -10,6 +10,7 @@ persist + recover between them.
 from __future__ import annotations
 
 import time
+from pathlib import Path
 
 import pytest
 
@@ -213,6 +214,8 @@ def test_filter_record(spark, tmp_path):
 class _BusyQuery:
     """A streaming query whose micro-batches never stop reading input."""
 
+    isActive = True
+
     def __init__(self):
         self.stopped = False
 
@@ -232,5 +235,22 @@ def test_drain_raises_at_deadline_after_stopping():
     query is stopped (graceful shutdown) and the caller gets TimeoutError."""
     q = _BusyQuery()
     with pytest.raises(TimeoutError):
-        _drain(q, available_now=False, timeout_s=0.3)
+        _drain(q, timeout_s=0.3)
     assert q.stopped
+
+
+def test_run_query_is_the_only_place_a_query_starts():
+    """Every streaming query the library starts goes through
+    ``streaming.flow.run_query``, so the trigger rule and the stop live in
+    one place: ``.trigger(`` and a writer ``.start(`` (or ``.toTable(``,
+    which also starts a query) appear only there, once each."""
+    pkg = Path(__file__).resolve().parent.parent / "kafka_flow_spark"
+    sites: dict[str, list[str]] = {".trigger(": [], ".start(": [], ".toTable(": []}
+    for path in sorted(pkg.rglob("*.py")):
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            for call, hits in sites.items():
+                if call in line:
+                    hits.append(f"{path.relative_to(pkg)}:{n}")
+    assert [s.split(":")[0] for s in sites[".trigger("]] == ["streaming/flow.py"], sites
+    assert [s.split(":")[0] for s in sites[".start("]] == ["streaming/flow.py"], sites
+    assert sites[".toTable("] == [], sites

@@ -1542,8 +1542,6 @@ def test_dim_heartbeat_picks_up_dim_edit_with_zero_fact_rows(spark, tmp_path):
     — and unchanged-world heartbeats commit NO versions (no churn)."""
     import time
 
-    from kafka_flow_spark.streaming.materialize import with_dim_heartbeat
-
     dim_path = str(tmp_path / "dim")
     spark.createDataFrame(
         [(10, "red"), (20, "blue")], "b_pk BIGINT, color STRING"
@@ -1559,16 +1557,10 @@ def test_dim_heartbeat_picks_up_dim_edit_with_zero_fact_rows(spark, tmp_path):
         n_buckets=4,
     )
     def start_q():
-        stream = with_dim_heartbeat(
+        return run_view_sink(
             spark.readStream.schema(FACT_CDC_SCHEMA).parquet(input_dir),
-            rows_per_second=5,
-        )
-        return (
-            stream.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", chk)
-            .trigger(processingTime="200 milliseconds")
-            .start()
+            sink, chk,
+            available_now=False, refresh_dim=True, dim_heartbeat_rps=5,
         )
 
     qbox = [start_q()]
@@ -2134,24 +2126,18 @@ def test_cascade_validates_topology_before_starting(spark, tmp_path):
 def test_cascading_sink_continuous_advances_downstream_per_batch(spark, tmp_path):
     """The continuous-trigger wrapper (cascading_sink — what run_view_sink
     installs for available_now=False): every committed micro-batch advances
-    the downstream inside the SAME foreachBatch turn."""
+    the downstream inside the SAME foreachBatch turn, and the call returns
+    the running query."""
     import time
-
-    from kafka_flow_spark.streaming.materialize import cascading_sink
 
     input_dir, chk = str(tmp_path / "in"), str(tmp_path / "chk")
     up = MaterializedAggView(str(tmp_path / "up"), ["k"], "v", row_pk=["pk"], n_buckets=4)
     d1 = MaterializedAggView(str(tmp_path / "d1"), ["k"], "v", row_pk=["pk"], n_buckets=4)
-    fb = cascading_sink(up, [_sub(up, d1)])
 
     _write(spark, input_dir, [(1, "a", 1.0, "added"), (2, "b", 2.0, "added")], CDC_SCHEMA)
-    q = (
-        spark.readStream.schema(CDC_SCHEMA).parquet(input_dir)
-        .writeStream.foreachBatch(fb)
-        .outputMode("update")
-        .option("checkpointLocation", chk)
-        .trigger(processingTime="200 milliseconds")
-        .start()
+    q = run_view_sink(
+        spark.readStream.schema(CDC_SCHEMA).parquet(input_dir), up, chk,
+        available_now=False, cascade=[_sub(up, d1)],
     )
 
     def wait_for(pred, timeout=60.0):
